@@ -4,7 +4,8 @@ Local harness: ``local[$SPARK_GRAFT_CPUS]`` single JVM. The configs
 below are the ones that also matter on a 1000-executor cluster:
 AQE (runtime re-planning, skew-join splitting, partition coalescing),
 UTC session timezone (oracle parity + cross-cluster determinism),
-Arrow for the Pandas-UDF slow path.
+Arrow for the Pandas-UDF slow path, and one state partition per core
+for stateful streaming.
 """
 
 from __future__ import annotations
@@ -20,14 +21,19 @@ from am_kinesis_pay_spark.compat import ensure_protobuf
 # (see compat.py). No-op when protobuf is pip-installed or absent.
 ensure_protobuf()
 
+# Partition count of stateful streaming operators in new queries
+# (falls back to spark.sql.shuffle.partitions when unset).
+STATE_PARTITIONS_CONF = "spark.sql.streaming.internal.stateStore.partitions"
+
 
 def get_session(app_name: str = "am_kinesis_pay_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        # ~1 partition per core locally; on a cluster this would be
-        # 2-3x total cores — AQE coalesces the excess at runtime.
+        # Batch shuffles use 32 partitions and AQE coalesces the excess
+        # at runtime. Stateful streaming runs with AQE off, so it gets
+        # its own count below (one state partition per core).
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -57,10 +63,11 @@ def get_session(app_name: str = "am_kinesis_pay_spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Spark 4.1's async checkpoint-file checksum writer can park
         # RocksDB commit tasks forever when many state partitions
-        # finish at once in a single local JVM (observed with the TWS
-        # queries at 32 partitions: tasks stuck in
-        # ChecksumCancellableFSDataOutputStream.close awaiting a
-        # checksum future). It guards DFS checkpoint integrity, which
+        # finish at once in a single local JVM (seen with the TWS
+        # queries when they ran 32 state partitions on a few cores:
+        # tasks stuck in ChecksumCancellableFSDataOutputStream.close
+        # awaiting a checksum future; not re-checked at one partition
+        # per core). It guards DFS checkpoint integrity, which
         # local-dir checkpoints don't need; keep default on clusters.
         .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
     )
@@ -75,4 +82,16 @@ def get_session(app_name: str = "am_kinesis_pay_spark") -> SparkSession:
             builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # Stateful streaming operators (applyInPandasWithState, TWS,
+    # streaming aggregation/dedup) run with AQE off, so they would keep
+    # all 32 shuffle partitions, and every micro-batch pays a fixed
+    # Python-runner + state-store cost per partition, even an empty
+    # one. One state partition per core (total executor cores on a
+    # cluster) removes that floor; batch plans keep 32 + AQE. A query
+    # restarted from a checkpoint keeps the count recorded in its
+    # offsets log. An explicit value (SPARK_GRAFT_EXTRA_CONF) wins.
+    if spark.conf.get(STATE_PARTITIONS_CONF, None) is None:
+        spark.conf.set(
+            STATE_PARTITIONS_CONF, str(spark.sparkContext.defaultParallelism)
+        )
     return spark

@@ -12,10 +12,13 @@ Reference semantics (kinesis-pay.php):
   (:264-268) maps to the state-timeout below.
 
 Implementation: ``applyInPandasWithState`` with EventTimeTimeout — the
-idiomatic Spark shape for custom per-key state. State is one tiny dict
-per in-flight key and is GC'd by watermark + timeout, so state size is
-O(active payments), independent of stream length — the property that
-matters at 100 TB/day.
+idiomatic Spark shape for custom per-key state. State is one small
+(created_us, decided) tuple per key. Only an undecided key arms a
+timeout, so only undecided keys are GC'd (when the watermark passes
+their deadline they emit 'expired' and are removed). A decided key
+sets no timeout and stays in state for good, so that late polls for it
+are ignored: state grows with every key ever seen, not with the active
+payments, and one micro-batch touches only the keys in its input.
 """
 
 from __future__ import annotations
@@ -47,17 +50,20 @@ STATE_SCHEMA = T.StructType(
 
 def _decide(pdf: pd.DataFrame, created_us: int):
     """First terminal event within the deadline, if any: returns
-    (state, decided_ms) or None. Mirrors stream_state_machine_batch."""
+    (state, decided_us) or None. Terminals are ordered by
+    (ts, event_type != 'purchase'), so a purchase and an error at the
+    same instant decide 'processed' whatever their row order — as
+    stream_state_machine_batch does (first_processed <= first_rejected)."""
     deadline_us = created_us + EXPIRY_US
     ts_us = (pdf["ts"].astype("int64") // 1_000).to_numpy()
     in_window = ts_us <= deadline_us
+    purchase = pdf["event_type"].isin(["purchase"]).to_numpy()
     terminal = pdf["event_type"].isin(["purchase", "error"]).to_numpy() & in_window
     if not terminal.any():
         return None
-    idx = ts_us[terminal].argmin()
-    row = pdf[terminal].iloc[idx]
-    state = "processed" if row["event_type"] == "purchase" else "rejected"
-    return state, int(ts_us[terminal][idx])
+    first_us = ts_us[terminal].min()
+    purchase_first = (purchase & terminal & (ts_us == first_us)).any()
+    return ("processed" if purchase_first else "rejected"), int(first_us)
 
 
 def payment_state_fn(

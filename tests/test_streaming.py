@@ -7,6 +7,7 @@ terminal events, pure-pending expiry)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 import shutil
 import uuid
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 
 from am_kinesis_pay_spark.functions.compat import dsum
 from am_kinesis_pay_spark.registry import queries
+from am_kinesis_pay_spark.session import STATE_PARTITIONS_CONF
 from am_kinesis_pay_spark.streaming.runner import (
     EVENT_SCHEMA,
     events_stream,
@@ -99,6 +101,32 @@ def _ts(minute: float) -> dt.datetime:
     return dt.datetime(2024, 3, 1, 12, 0, 0) + dt.timedelta(minutes=minute)
 
 
+def _write_batches(spark, out: str, batches) -> str:
+    """Write each list of (event_id, ts, user_id, event_type, value,
+    props) rows as one ordered parquet file, ``batch_0000`` onwards,
+    so the file source replays them as successive micro-batches with
+    row order kept inside each file."""
+    for i, rows in enumerate(batches):
+        df = spark.createDataFrame(
+            [
+                {
+                    "event_id": r[0],
+                    "ts": r[1],
+                    "user_id": r[2],
+                    "event_type": r[3],
+                    "value": r[4],
+                    "props": r[5],
+                }
+                for r in rows
+            ],
+            EVENT_SCHEMA,
+        )
+        df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_{i:04d}")
+        )
+    return out
+
+
 def _stage_payment_fixture(spark, base_dir: str) -> str:
     """FIXTURES.md §B status_polls edge rows, split into 3 ordered
     micro-batch files."""
@@ -126,25 +154,7 @@ def _stage_payment_fixture(spark, base_dir: str) -> str:
             (99, _ts(60 * 24), 99, "purchase", 1.0, None),
         ],
     ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            [
-                {
-                    "event_id": r[0],
-                    "ts": r[1],
-                    "user_id": r[2],
-                    "event_type": r[3],
-                    "value": r[4],
-                    "props": r[5],
-                }
-                for r in rows
-            ],
-            EVENT_SCHEMA,
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"batch_{i:04d}")
-        )
-    return out
+    return _write_batches(spark, out, batches)
 
 
 def test_payment_state_machine(spark, tmp_path_factory):
@@ -167,6 +177,126 @@ def test_payment_state_machine(spark, tmp_path_factory):
         assert rows[99][0] == "processed"  # sentinel decides itself
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_state_machine_same_instant_purchase_beats_error(spark, tmp_path_factory):
+    """A purchase and an error at the same ts in one micro-batch decide
+    'processed' whatever their row order: the batch form's tie rule
+    (first_processed <= first_rejected)."""
+    d = _write_batches(
+        spark,
+        os.path.join(str(tmp_path_factory.mktemp("payfix_tie")), "tie"),
+        [
+            [
+                (1, _ts(0), 1, "view", 1.0, None),
+                (2, _ts(1), 1, "error", 0.0, None),
+                (3, _ts(1), 1, "purchase", 9.0, None),
+                (4, _ts(0), 2, "view", 1.0, None),
+                (5, _ts(1), 2, "purchase", 9.0, None),
+                (6, _ts(1), 2, "error", 0.0, None),
+            ]
+        ],
+    )
+    out = run_to_completion(
+        payment_state_machine(events_stream(spark, d), watermark="1 minute"),
+        f"tie_{uuid.uuid4().hex[:6]}",
+        "append",
+    )
+    got = {r.user_id: (r.final_state, r.decided_at) for r in out.collect()}
+    assert got == {1: ("processed", _ts(1)), 2: ("processed", _ts(1))}
+
+
+# Decisions of _stage_payment_fixture's keys once every batch has run.
+_PAYMENT_FIXTURE_DECISIONS = {
+    1: ("processed", _ts(3)),
+    2: ("rejected", _ts(2)),
+    3: ("expired", _ts(10)),
+    5: ("processed", _ts(0)),
+    6: ("expired", _ts(10)),
+    99: ("processed", _ts(60 * 24)),
+}
+
+
+def _run_state_machine_to_files(spark, data_dir: str, out_dir: str, ckpt: str):
+    """Drain the payment state machine over ``data_dir`` into a parquet
+    file sink (exactly-once across restarts) with checkpoint ``ckpt``."""
+    q = (
+        payment_state_machine(events_stream(spark, data_dir), watermark="1 minute")
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _state_partition_ids(ckpt: str) -> list[int]:
+    """Partition directories of the query's one stateful operator."""
+    root = os.path.join(ckpt, "state", "0")
+    return sorted(int(p) for p in os.listdir(root) if p.isdigit())
+
+
+def _recorded_state_partitions(ckpt: str) -> set[int]:
+    """State partition count every offsets-log entry records (Spark
+    stores it as spark.sql.shuffle.partitions in the batch metadata)."""
+    counts = set()
+    offsets = os.path.join(ckpt, "offsets")
+    for name in os.listdir(offsets):
+        if name.isdigit():
+            with open(os.path.join(offsets, name)) as f:
+                meta = json.loads(f.read().splitlines()[1])
+            counts.add(int(meta["conf"]["spark.sql.shuffle.partitions"]))
+    return counts
+
+
+def test_stateful_query_runs_one_state_partition_per_core(spark, tmp_path_factory):
+    """get_session gives stateful streaming operators one state
+    partition per core instead of the 32 batch shuffle partitions. A
+    Spark version that drops or ignores the internal setting fails here
+    rather than silently paying 32 state tasks per micro-batch."""
+    base = str(tmp_path_factory.mktemp("state_parts"))
+    d = _stage_payment_fixture(spark, base)
+    ckpt = os.path.join(base, "ckpt")
+    n = spark.sparkContext.defaultParallelism
+    assert spark.conf.get(STATE_PARTITIONS_CONF) == str(n)
+    _run_state_machine_to_files(spark, d, os.path.join(base, "out"), ckpt)
+    assert _state_partition_ids(ckpt) == list(range(n))
+    assert _recorded_state_partitions(ckpt) == {n}
+
+
+def test_restart_keeps_checkpointed_state_partition_count(spark, tmp_path_factory):
+    """A query started with 3 state partitions and restarted from its
+    checkpoint under the session's per-core setting keeps 3 (the count
+    in the offsets log wins), and its state carries over: the
+    duplicate purchase of key 5 does not re-fire and keys 3 and 6
+    expire after the restart."""
+    base = str(tmp_path_factory.mktemp("state_parts_restart"))
+    src = _stage_payment_fixture(spark, base)
+    data, out, ckpt = (os.path.join(base, p) for p in ("data", "out", "ckpt"))
+    batches = sorted(os.listdir(src))
+    shutil.copytree(os.path.join(src, batches[0]), os.path.join(data, batches[0]))
+
+    saved = spark.conf.get(STATE_PARTITIONS_CONF)
+    spark.conf.set(STATE_PARTITIONS_CONF, "3")
+    try:
+        _run_state_machine_to_files(spark, data, out, ckpt)
+    finally:
+        spark.conf.set(STATE_PARTITIONS_CONF, saved)
+    assert _state_partition_ids(ckpt) == [0, 1, 2]
+
+    for b in batches[1:]:
+        shutil.copytree(os.path.join(src, b), os.path.join(data, b))
+    _run_state_machine_to_files(spark, data, out, ckpt)
+    assert _state_partition_ids(ckpt) == [0, 1, 2]
+    assert _recorded_state_partitions(ckpt) == {3}
+    rows = spark.read.parquet(out).collect()
+    assert len(rows) == len(_PAYMENT_FIXTURE_DECISIONS)  # exactly once
+    got = {r.user_id: (r.final_state, r.decided_at) for r in rows}
+    assert got == _PAYMENT_FIXTURE_DECISIONS
 
 
 def test_state_machine_stream_agrees_with_batch_query(spark, stream_dir):
@@ -386,13 +516,8 @@ def test_tws_poll_throttle_equals_batch_modulus(spark, stream_dir):
         )
 
     # TWS needs multi-column-family state → RocksDB provider required.
-    # 8 state partitions, not 32: each partition boots a Python worker
-    # per micro-batch for the stateful processor, and 15 keys don't
-    # need 32-way state parallelism in a test.
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         got = run_to_completion(
             poll_throttle_tws(events_stream(spark, stream_dir)),
@@ -402,7 +527,6 @@ def test_tws_poll_throttle_equals_batch_modulus(spark, stream_dir):
         )
         got_rows = sorted((r.user_id, r.ts, r.poll_seq) for r in got.collect())
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -537,10 +661,7 @@ def test_tws_state_machine_matches_applyinpandas_form(spark, tmp_path_factory):
 
     d = _stage_payment_fixture(spark, str(tmp_path_factory.mktemp("payfix_tws")))
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    # 8 state partitions: see test_tws_poll_throttle_equals_batch_modulus
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         stream = events_stream(spark, d)
         out = run_to_completion(
@@ -557,7 +678,6 @@ def test_tws_state_machine_matches_applyinpandas_form(spark, tmp_path_factory):
         assert rows[6][0] == "expired"  # terminal arrived after deadline
         assert rows[99][0] == "processed"  # sentinel decides itself
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -683,6 +803,14 @@ def test_tws_processor_semantics_via_stub_handle():
         fire_timers_at_end_wm=10**15,
     )
     assert [o["final_state"][0] for o in out] == ["expired"]
+
+    # error then purchase at the same ts in one batch → purchase wins
+    # (the batch form's first_processed <= first_rejected tie rule)
+    out, _ = run_key(
+        8, [[(8, 0, 8, "view"), (15, 1, 8, "error"), (16, 1, 8, "purchase")]], [0]
+    )
+    assert [o["final_state"][0] for o in out] == ["processed"]
+    assert out[0]["decided_at"][0] == pd.Timestamp(_ts(1))
 
 
 def test_stream_stream_left_outer_join_matches_batch(spark, stream_dir):
@@ -865,25 +993,7 @@ def _stage_out_of_order_fixture(spark, base_dir: str) -> str:
             (99, _ts(60 * 24), 99, "poll", 1.0, None),
         ],
     ]
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            [
-                {
-                    "event_id": r[0],
-                    "ts": r[1],
-                    "user_id": r[2],
-                    "event_type": r[3],
-                    "value": r[4],
-                    "props": r[5],
-                }
-                for r in rows
-            ],
-            EVENT_SCHEMA,
-        )
-        df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(out, f"batch_{i:04d}")
-        )
-    return out
+    return _write_batches(spark, out, batches)
 
 
 def test_tws_reorder_buffer_restores_event_time_order(spark, tmp_path_factory):
@@ -908,9 +1018,7 @@ def test_tws_reorder_buffer_restores_event_time_order(spark, tmp_path_factory):
 
     d = _stage_out_of_order_fixture(spark, str(tmp_path_factory.mktemp("ooo_tws")))
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         out = run_to_completion(
             reorder_buffer_tws(events_stream(spark, d), watermark="1 minute"),
@@ -919,7 +1027,6 @@ def test_tws_reorder_buffer_restores_event_time_order(spark, tmp_path_factory):
         )
         rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -968,9 +1075,7 @@ def test_tws_map_state_counter_changelog_equals_batch_counts(spark, stream_dir):
         )
 
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         out = run_to_completion(
             type_counter_tws(events_stream(spark, stream_dir)),
@@ -979,7 +1084,6 @@ def test_tws_map_state_counter_changelog_equals_batch_counts(spark, stream_dir):
         )
         rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -1236,9 +1340,7 @@ def test_tws_stickiness_changelog_equals_batch(spark, stream_dir):
         )
 
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         out = run_to_completion(
             stickiness_tws(events_stream(spark, stream_dir)),
@@ -1263,7 +1365,6 @@ def test_tws_stickiness_changelog_equals_batch(spark, stream_dir):
         )
         got = sorted(map(tuple, rolled.collect()))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
@@ -1303,15 +1404,12 @@ def _run_tws_upsert(spark, stream_df, name):
     from am_kinesis_pay_spark.streaming.tws_state_machine import ROCKSDB_PROVIDER
 
     saved = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    saved_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         return run_to_completion(
             stream_df, f"{name}_{uuid.uuid4().hex[:6]}", "append"
         )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_parts)
         if saved is None:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         else:
